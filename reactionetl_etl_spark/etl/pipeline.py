@@ -46,7 +46,7 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from reactionetl_etl_spark.etl.commit import (
@@ -88,9 +88,8 @@ class ReactionLake:
         # parity: rotating info.log + error.log under <lake>/logs unless
         # pointed elsewhere. The audit table stays the queryable record.
         setup_logging(log_dir or f"{self.root}/logs")
-        # wall-clock seconds per run_once phase, refreshed each call —
-        # the decomposition handle tools/ingest_decompose.py reads so
-        # ingest perf work targets the right phase instead of guessing
+        # wall-clock seconds per run_once phase, refreshed each call;
+        # perfbench's traced ingest_daily run reports them as etl.phase.*
         self.last_phase_timings: dict[str, float] = {}
 
     # -- table readers ----------------------------------------------------
@@ -133,7 +132,7 @@ class ReactionLake:
     # -- incremental discovery (M1/M2 replacement) ------------------------
 
     def _new_files(self, spark: SparkSession, listed: list[RawFile]) -> list[RawFile]:
-        """Filter out files already in the manifest.
+        """Filter out files already in the manifest, keeping listing order.
 
         The listed backlog is driver-side (it is metadata); membership
         is checked with a join against the manifest table so the
@@ -144,16 +143,14 @@ class ReactionLake:
         manifest = self.manifest(spark)
         if manifest is None:
             return listed
-        listed_df = spark.createDataFrame(
-            [(f.path, f.day) for f in listed], "path string, day string"
-        )
-        fresh = (
-            listed_df.join(
+        listed_df = spark.createDataFrame([(f.path,) for f in listed], "path string")
+        fresh = {
+            r["path"]
+            for r in listed_df.join(
                 manifest.select(F.col("source_file").alias("path")), on="path", how="left_anti"
-            )
-            .collect()
-        )
-        return [RawFile(r["path"], r["day"]) for r in fresh]
+            ).collect()
+        }
+        return [f for f in listed if f.path in fresh]
 
     # -- the run ----------------------------------------------------------
 
@@ -162,24 +159,21 @@ class ReactionLake:
         spark: SparkSession,
         incoming_root: str,
         now: datetime | None = None,
-        enrich_inline: bool = True,
     ) -> RunResult:
         """Process every not-yet-processed file under incoming/<day>/.
 
-        ``enrich_inline`` (default): fact rows pick up their dim's
-        simulation_num DURING the fact write — the metadata JSONs are
-        cleansed first, and the fact append runs through the same
-        broadcast update-join (`enrich_fact`, J1) that
-        `materialize_enrichment` uses. The reference's main() also ends
-        every invocation with facts enriched (clean → load →
-        update_fact_simulations in one run); inlining reaches the same
-        end state without writing the fact table twice — at 512
-        bench files the separate enrichment rewrite was ~4 s of a 13 s
-        ingest. Facts whose metadata hasn't arrived stay NULL and
-        `materialize_enrichment` remains the late-metadata gap-filler
-        (the staged atomic partition-swap path, exercised by the
-        late-dim tests). ``enrich_inline=False`` restores the strict
-        load-then-rewrite sequence."""
+        Fact rows pick up their dim's simulation_num DURING the fact
+        write: the metadata JSONs are cleansed and appended first, and
+        the fact append runs through the same broadcast update-join
+        (`enrich_fact`, J1) that `materialize_enrichment` uses. The
+        reference's main() also ends every invocation with facts
+        enriched (clean → load → update_fact_simulations in one run);
+        inlining reaches the same end state without writing the fact
+        table twice — at 512 bench files the separate enrichment
+        rewrite was ~4 s of a 13 s ingest. Facts whose metadata hasn't
+        arrived stay NULL and `materialize_enrichment` remains the
+        late-metadata gap-filler (the staged atomic partition-swap
+        path)."""
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         # one nonce per run_once call: etl_ids stay deterministic WITHIN
         # a run (audit + manifest writes of the same status frame agree)
@@ -191,8 +185,10 @@ class ReactionLake:
         _t0 = time.perf_counter()
         all_csvs = list_raw_files(incoming_root, ".csv")
         all_jsons = list_raw_files(incoming_root, ".json")
-        csvs = self._new_files(spark, all_csvs)
-        jsons = self._new_files(spark, all_jsons)
+        # one manifest anti-join for both suffixes
+        fresh = self._new_files(spark, all_csvs + all_jsons)
+        csvs = [f for f in fresh if f.path.endswith(".csv")]
+        jsons = [f for f in fresh if f.path.endswith(".json")]
         # Fresh-backlog fast path (the daily-drop norm): when every
         # listed file is new, the cleanse readers may scan day DIRS with
         # a glob instead of resolving each path on the driver — O(dirs)
@@ -213,156 +209,112 @@ class ReactionLake:
         # counts, statuses, and error messages are joined/derived as
         # DataFrames, so a million-file backlog never serializes its
         # audit trail through driver memory. The only driver-side
-        # remnants are the file listing itself (metadata) and one
-        # 1-row tally aggregate per branch for RunResult.
+        # remnant is the file listing itself (metadata). The RunResult
+        # tallies are Observations on each status frame's eager
+        # checkpoint, the frame's single materializing action, so they
+        # cost no job of their own.
         csv_st = json_st = None
         fact_loaded = dim_loaded = quarantined_files = 0
         _t0 = time.perf_counter()
 
-        # Overlap (r14, guide-§2.6 shape): the CSV PARSE does not depend
-        # on the dims phase — only the fact append's inline enrich join
-        # does. Kick the cleanse scan's cache materialization off on a
-        # driver thread so it back-fills executor cores while the dims
-        # phase runs its (small, underparallelized) jobs; the fact
-        # branch below joins the by-then-appended dim exactly as
-        # before. count() on the clean projection populates the persist
-        # of the full parsed scan (InMemoryRelation materializes every
-        # column). NOTE: the per-phase wall timers overlap under this —
-        # rp_dims absorbs parse time that previously showed under
-        # rp_fact_cleanse_write.
-        from concurrent.futures import ThreadPoolExecutor
-
-        csv_result = None
-        _csv_warm = _csv_pool = None
-        if csvs:
-            csv_result = cleanse_incoming_csvs(spark, csvs, dir_read=csv_dir_read)
-            if jsons:
-                _csv_pool = ThreadPoolExecutor(1)
-                _csv_warm = _csv_pool.submit(csv_result.clean.count)
-
-        def _abort_csv_pool() -> None:
-            # r15 (ADVICE): every exceptional exit between the warm-up
-            # submit above and its consumption in the fact branch must
-            # still shut the executor down — otherwise the non-daemon
-            # worker keeps the interpreter alive while the exception
-            # propagates. cancel_futures drops the job if it has not
-            # started; a mid-flight count just finishes into a dropped
-            # future.
-            if _csv_pool is not None:
-                _csv_pool.shutdown(wait=False, cancel_futures=True)
-
         # ---- metadata JSONs → dim_rxn (V3 + W3 + X4) ----
         # Dims are processed BEFORE the facts so the fact append can
-        # pick up this batch's simulation_nums inline (enrich_inline).
-        try:
-            if jsons:
-                result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
-                existing_dim = self.dim(spark)
-                new_meta = result.clean
-                if existing_dim is not None:
-                    # PK semantics (create_tables.sql:19): never load a
-                    # simulation_id twice — skip already-present, dedupe batch
-                    new_meta = new_meta.join(
-                        existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
-                    )
-                new_meta = new_meta.dropDuplicates(["simulation_id"])
-                offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
-                # approx_rows = file count (≤1 dim row per file): small
-                # batches take dense_sequence's one-task window, skipping
-                # the distributed rank's constant-overhead stages
-                dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
-                    "simulation_id",
-                    "simulation_num",
-                    "reaction_name",
-                    "activation_energy",
-                    "ca0",
-                    "cb0",
-                    "t0",
-                    "date_run",
-                    "stop_reason",
-                    "stop_time_s",
-                    "source_file",
-                    "day",
-                ).persist()
-                files_df = spark.createDataFrame(
-                    [(f.path, f.day) for f in jsons], "path string, day string"
+        # pick up this batch's simulation_nums inline.
+        if jsons:
+            result = cleanse_metadata_jsons(spark, jsons, dir_read=json_dir_read)
+            existing_dim = self.dim(spark)
+            new_meta = result.clean
+            if existing_dim is not None:
+                # PK semantics (create_tables.sql:19): never load a
+                # simulation_id twice — skip already-present, dedupe batch
+                new_meta = new_meta.join(
+                    existing_dim.select("simulation_id"), on="simulation_id", how="left_anti"
                 )
-                loaded = (
-                    dim_new.select(_strip_scheme_col(F.col("source_file")).alias("path"))
-                    .distinct()
-                    .withColumn("__loaded", F.lit(True))
+            new_meta = new_meta.dropDuplicates(["simulation_id"])
+            offset = current_max_simulation_num(existing_dim) if existing_dim is not None else 0
+            # approx_rows = file count (≤1 dim row per file): small
+            # batches take dense_sequence's one-task window, skipping
+            # the distributed rank's constant-overhead stages
+            dim_new = assign_simulation_nums(new_meta, offset, approx_rows=len(jsons)).select(
+                "simulation_id",
+                "simulation_num",
+                "reaction_name",
+                "activation_energy",
+                "ca0",
+                "cb0",
+                "t0",
+                "date_run",
+                "stop_reason",
+                "stop_time_s",
+                "source_file",
+                "day",
+            ).persist()
+            files_df = spark.createDataFrame(
+                [(f.path, f.day) for f in jsons], "path string, day string"
+            )
+            loaded = (
+                dim_new.select(_strip_scheme_col(F.col("source_file")).alias("path"))
+                .distinct()
+                .withColumn("__loaded", F.lit(True))
+            )
+            bad = (
+                result.quarantined.select(_strip_scheme_col(F.col("source_file")).alias("path"))
+                .distinct()
+                .withColumn("__bad", F.lit(True))
+            )
+            json_obs = Observation()
+            json_st = (
+                files_df.join(loaded, "path", "left")
+                .join(bad, "path", "left")
+                .withColumn("status", F.when(F.col("__bad"), "quarantined").otherwise(F.lit("success")))
+                .withColumn(
+                    "error_message",
+                    F.when(F.col("__bad"), "metadata validation failed").when(
+                        F.col("__loaded").isNull() & F.col("__bad").isNull(),
+                        "duplicate simulation_id (skipped)",
+                    ),
                 )
-                bad = (
-                    result.quarantined.select(_strip_scheme_col(F.col("source_file")).alias("path"))
-                    .distinct()
-                    .withColumn("__bad", F.lit(True))
+                .withColumn(
+                    "records_inserted",
+                    F.when(F.col("__bad").isNull() & F.col("__loaded").isNotNull(), 1)
+                    .otherwise(0)
+                    .cast("int"),
                 )
-                json_st = (
-                    files_df.join(loaded, "path", "left")
-                    .join(bad, "path", "left")
-                    .withColumn("status", F.when(F.col("__bad"), "quarantined").otherwise(F.lit("success")))
-                    .withColumn(
-                        "error_message",
-                        F.when(F.col("__bad"), "metadata validation failed").when(
-                            F.col("__loaded").isNull() & F.col("__bad").isNull(),
-                            "duplicate simulation_id (skipped)",
-                        ),
-                    )
-                    .withColumn(
-                        "records_inserted",
-                        F.when(F.col("__bad").isNull() & F.col("__loaded").isNotNull(), 1)
-                        .otherwise(0)
-                        .cast("int"),
-                    )
-                    .withColumn("etl_id", _derived_etl_id(F.col("path"), run_token))
-                    .withColumn("simulation_id", _filename_key(F.col("path"), r"^metadata_(.+)\.json$"))
-                    .withColumn("etl_type", F.lit("metadata"))
-                    # Eager lineage break BEFORE the dim append: st's plan
-                    # contains the anti-join against dim_path, so any later
-                    # re-evaluation (and dim_new.unpersist() CASCADES the
-                    # uncache into dependent cached plans, making one
-                    # likely) would see the appended output and anti-join
-                    # the new rows away. localCheckpoint decouples st from
-                    # dim_path entirely; a plain persist() does not survive
-                    # the cascade.
-                    .repartition(max(1, len(jsons) // 100_000))
-                    .localCheckpoint(eager=True)
+                .withColumn("etl_id", _derived_etl_id(F.col("path"), run_token))
+                .withColumn("simulation_id", _filename_key(F.col("path"), r"^metadata_(.+)\.json$"))
+                .withColumn("etl_type", F.lit("metadata"))
+                .observe(
+                    json_obs,
+                    F.sum("records_inserted").alias("loaded"),
+                    F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
                 )
-                # overlap (r14): the dim append reads dim_new's cache, the
-                # tally reads the json_st checkpoint — independent jobs, so
-                # the tally back-fills cores while the write commits
-                with ThreadPoolExecutor(1) as _dim_pool:
-                    _dim_wr = _dim_pool.submit(
-                        lambda: dim_new.write.mode("append").parquet(self.dim_path)
-                    )
-                    tally = json_st.agg(
-                        F.sum("records_inserted").alias("loaded"),
-                        F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
-                    ).first()
-                    _dim_wr.result()
-                dim_new.unpersist()
-                dim_loaded += int(tally["loaded"] or 0)
-                quarantined_files += int(tally["q"] or 0)
-                if tally["q"]:
-                    result.quarantined.write.mode("append").parquet(self.quarantine_path)
-                    log.warning("quarantined %d metadata files (validation failed)", int(tally["q"]))
-                log.info("metadata: %d files, %d dim rows loaded", len(jsons), int(tally["loaded"] or 0))
-                result.release()
+                # Eager lineage break BEFORE the dim append: st's plan
+                # contains the anti-join against dim_path, so any later
+                # re-evaluation (and dim_new.unpersist() CASCADES the
+                # uncache into dependent cached plans, making one
+                # likely) would see the appended output and anti-join
+                # the new rows away. localCheckpoint decouples st from
+                # dim_path entirely; a plain persist() does not survive
+                # the cascade.
+                .repartition(max(1, len(jsons) // 100_000))
+                .localCheckpoint(eager=True)
+            )
+            tally = json_obs.get
+            dim_new.write.mode("append").parquet(self.dim_path)
+            dim_new.unpersist()
+            dim_loaded += tally["loaded"]
+            quarantined_files += tally["q"]
+            if tally["q"]:
+                result.quarantined.write.mode("append").parquet(self.quarantine_path)
+                log.warning("quarantined %d metadata files (validation failed)", tally["q"])
+            log.info("metadata: %d files, %d dim rows loaded", len(jsons), tally["loaded"])
+            result.release()
 
-            _pt["dims"] = time.perf_counter() - _t0
-        except BaseException:
-            _abort_csv_pool()
-            raise
-        # ---- reaction CSVs → fact_sim (EP2 + W2; + inline J1) ----
+        _pt["dims"] = time.perf_counter() - _t0
+        # ---- reaction CSVs → fact_sim (EP2 + W2 + inline J1) ----
         _t0 = time.perf_counter()
         if csvs:
-            result = csv_result
-            if _csv_warm is not None:
-                try:
-                    _csv_warm.result()  # surface any cleanse error here
-                finally:
-                    # shutdown even when the warm-up raised (r15, ADVICE)
-                    _csv_pool.shutdown(wait=False)
+            result = cleanse_incoming_csvs(spark, csvs, dir_read=csv_dir_read)
             fact_cols = [
                 "row_id",
                 "simulation_id",
@@ -384,41 +336,19 @@ class ReactionLake:
                     "simulation_num": F.lit(None).cast("int"),
                 }
             ).select(*fact_cols)
-            if enrich_inline:
-                # the dim read AFTER the JSON append sees this batch's
-                # rows; facts with absent metadata stay NULL for the
-                # materialize_enrichment gap-filler
-                dim_now = self.dim(spark)
-                if dim_now is not None:
-                    fact_new = enrich_fact(fact_new, dim_now).select(*fact_cols)
-            # overlap (r14): the fact append and the per-file status
-            # checkpoint both read the (already-materialized) cleanse
-            # cache and nothing else they share, so the status build
-            # back-fills cores while the write commits. When no JSON
-            # batch pre-warmed the cache, populate it first — two cold
-            # concurrent consumers would otherwise both compute the
-            # parse (CacheManager does not dedupe in-flight partition
-            # computation across jobs).
-            if _csv_warm is None:
-                csv_result.clean.count()
-            with ThreadPoolExecutor(1) as _fact_pool:
-                _fact_wr = _fact_pool.submit(
-                    lambda: fact_new.write.mode("append")
-                    .partitionBy("day")
-                    .parquet(self.fact_path)
-                )
-                csv_st = self._csv_status_frame(spark, csvs, result, fact_new, run_token)
-                _fact_wr.result()
+            # the dim read AFTER the JSON append sees this batch's rows;
+            # facts with absent metadata stay NULL for the
+            # materialize_enrichment gap-filler
+            dim_now = self.dim(spark)
+            if dim_now is not None:
+                fact_new = enrich_fact(fact_new, dim_now).select(*fact_cols)
+            fact_new.write.mode("append").partitionBy("day").parquet(self.fact_path)
             _pt["fact_cleanse_write"] = time.perf_counter() - _t0
             _t0 = time.perf_counter()
 
-            tally = csv_st.agg(
-                F.sum(F.when(F.col("status") == "success", F.col("n_ok")).otherwise(F.lit(0))).alias("ok"),
-                F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
-                F.sum("n_bad").alias("bad_rows"),
-            ).first()
-            fact_loaded += int(tally["ok"] or 0)
-            quarantined_files += int(tally["q"] or 0)
+            csv_st, tally = self._csv_status_frame(spark, csvs, result, fact_new, run_token)
+            fact_loaded += tally["ok"]
+            quarantined_files += tally["q"]
             if tally["bad_rows"]:
                 result.quarantined.write.mode("append").parquet(self.quarantine_path)
             if result.rejected_files:
@@ -430,12 +360,13 @@ class ReactionLake:
                     "payload string, reason string, source_file string, day string",
                 )
                 rej.write.mode("append").parquet(self.quarantine_path)
+            result.release()
             log.info(
                 "ingested %d reaction files: %d rows loaded, %d files quarantined",
-                len(csvs), fact_loaded, int(tally["q"] or 0),
+                len(csvs), fact_loaded, tally["q"],
             )
             if tally["q"]:
-                log.warning("quarantined %d reaction files (see audit/quarantine tables)", int(tally["q"]))
+                log.warning("quarantined %d reaction files (see audit/quarantine tables)", tally["q"])
 
         _pt["fact_status"] = time.perf_counter() - _t0
         # ---- audit + manifest appends (DataFrame-native, W4/W5) ----
@@ -456,8 +387,6 @@ class ReactionLake:
             ).write.mode("append").parquet(self.manifest_path)
 
         _pt["audit_manifest"] = time.perf_counter() - _t0
-        if csv_result is not None:
-            csv_result.release()
         log.info(
             "run_once done: %d fact rows, %d dim rows, %d files (%d quarantined)",
             fact_loaded, dim_loaded, len(csvs) + len(jsons), quarantined_files,
@@ -471,11 +400,11 @@ class ReactionLake:
         result,
         fact_new: DataFrame,
         run_token: str,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, dict]:
         """Per-file status frame for the reaction-CSV branch (rows =
-        files), eagerly checkpointed. Factored out of run_once (r14) so
-        it can build concurrently with the fact append — both consume
-        the materialized cleanse cache and nothing else they share."""
+        files), eagerly checkpointed, and the branch's RunResult tallies
+        (``ok`` rows loaded, ``q`` files quarantined, ``bad_rows``)
+        observed on that checkpoint."""
         files_df = spark.createDataFrame(
             [(f.path, f.day) for f in csvs], "path string, day string"
         )
@@ -493,7 +422,8 @@ class ReactionLake:
         )
         n_bad_expr = F.col("n_bad") > 0
         fully_bad = n_bad_expr & (F.col("n_ok") == 0)
-        return (
+        obs = Observation()
+        st = (
             files_df.join(ok_counts, "path", "left")
             .join(bad_counts, "path", "left")
             .join(rejected_df, "path", "left")
@@ -516,17 +446,24 @@ class ReactionLake:
             .withColumn("simulation_id", _filename_key(F.col("path"), r"^reaction(.+)\.csv$"))
             .withColumn("etl_type", F.lit("reaction"))
             .withColumn("records_inserted", F.col("n_ok").cast("int"))
+            .observe(
+                obs,
+                F.sum(F.when(F.col("status") == "success", F.col("n_ok")).otherwise(F.lit(0))).alias("ok"),
+                F.sum((F.col("status") == "quarantined").cast("int")).alias("q"),
+                F.sum("n_bad").alias("bad_rows"),
+            )
             # Eager lineage break (files-sized frame): the audit and
             # manifest writes must not re-evaluate this plan after
-            # csv_result.release() drops the cleanse persists.
+            # result.release() drops the cleanse persists.
             # repartition (NOT coalesce — coalesce would drag the
             # whole upstream cleanse down to one task) keeps the
             # checkpointed frame at one partition per ~100k files so
-            # the downstream jobs (audit, manifest, tally) don't
-            # each schedule near-empty tasks.
+            # the downstream audit and manifest jobs don't each
+            # schedule near-empty tasks.
             .repartition(max(1, len(csvs) // 100_000))
             .localCheckpoint(eager=True)
         )
+        return st, obs.get
 
     # -- enrichment (EP3) -------------------------------------------------
 

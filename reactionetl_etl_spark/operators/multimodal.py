@@ -1766,7 +1766,11 @@ def image_dhash(
                     hs = (bits @ pow2).view(np.int64)
                     for j, i in enumerate(part):
                         hashes[i] = int(hs[j])
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), out_col: hashes})
+            # nullable Int64: a plain list of ints + None becomes float64
+            # in pandas, rounding every hash above 2^53 to a neighbour
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].to_numpy(), out_col: pd.array(hashes, dtype="Int64")}
+            )
 
     return df.select(id_col, binary_col).mapInPandas(
         hash_batches, f"{id_col} long, {out_col} long"

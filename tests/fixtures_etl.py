@@ -3,7 +3,7 @@
 Deterministic (seeded) generators for raw simulation CSVs and metadata
 JSONs matching the reference's raw formats, including the negative
 variants: missing required column, extra column, pandas index artifact,
-malformed numeric row, invalid metadata.
+malformed numeric row (or every row malformed), invalid metadata.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ def write_reaction_csv(
     drop_col: str | None = None,
     extra_col: bool = False,
     malformed_row_at: int | None = None,
+    all_malformed: bool = False,
 ) -> str:
     sid = sim_uuid(sim_num)
     header = list(RAW_HEADER)
@@ -59,7 +60,7 @@ def write_reaction_csv(
             "Notes": "ok",
             "Unnamed: 0": str(i),
         }
-        if malformed_row_at is not None and i == malformed_row_at:
+        if all_malformed or i == malformed_row_at:
             vals["T (K)"] = "NOT_A_NUMBER"
         lines.append(",".join(vals[h] for h in header))
     os.makedirs(day_dir, exist_ok=True)

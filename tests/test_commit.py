@@ -128,10 +128,13 @@ def test_enrichment_uses_staged_commit_end_to_end(spark, tmp_path):
     day_dir = os.path.join(incoming, "2026-01-05")
     for n in range(1, 5):
         write_reaction_csv(day_dir, n, 20)
-        write_metadata_json(day_dir, n)
     lake = ReactionLake(str(tmp_path / "lake"))
-    # strict load-then-rewrite so the staged path has real gaps to fill
-    lake.run_once(spark, incoming, enrich_inline=False)
+    # facts land a run before their metadata, as late metadata does in
+    # production, so the staged path has real gaps to fill
+    lake.run_once(spark, incoming)
+    for n in range(1, 5):
+        write_metadata_json(day_dir, n)
+    lake.run_once(spark, incoming)
     n = lake.materialize_enrichment(spark)
     assert n > 0
     fact = lake.fact(spark)

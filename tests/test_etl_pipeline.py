@@ -7,6 +7,7 @@ quarantine of malformed input — against the Spark pipeline.
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import datetime
 
 import pytest
@@ -36,11 +37,14 @@ def incoming(tmp_path_factory):
         "ok3": write_reaction_csv(d2, 3, N_ROWS, extra_col=True),
         "missing_col": write_reaction_csv(d2, 4, N_ROWS, drop_col="Tsensor (K)"),
         "malformed": write_reaction_csv(d2, 5, N_ROWS, malformed_row_at=7),
+        "all_malformed": write_reaction_csv(d2, 9, N_ROWS, all_malformed=True),
         "meta1": write_metadata_json(d1, 1, "2026-01-05"),
         "meta2": write_metadata_json(d1, 2, "2026-01-05"),
         "meta3": write_metadata_json(d2, 3, "2026-01-06"),
         "meta_bad": write_metadata_json(d2, 6, "2026-01-06", bad_value=True),
         "meta_missing": write_metadata_json(d2, 7, missing_field="reaction_name"),
+        # same simulation_id as meta3 in the same batch: one is skipped
+        "meta_dup": write_metadata_json(d1, 3, "2026-01-06"),
     }
     # non-.csv file in a day dir must be ignored (file_manager.py:45)
     (root / "2026-01-06" / "notes.txt").write_text("ignore me")
@@ -80,6 +84,7 @@ def test_fact_rowcounts(spark, lake):
     assert per_sim[sim_uuid(3)] == N_ROWS  # extra column tolerated
     assert per_sim[sim_uuid(5)] == N_ROWS - 1  # malformed row quarantined
     assert sim_uuid(4) not in per_sim  # missing required column → rejected
+    assert sim_uuid(9) not in per_sim  # every row malformed
     assert lake.result.fact_rows_loaded == 4 * N_ROWS - 1
 
 
@@ -107,7 +112,7 @@ def test_dim_contents_and_sequence(spark, lake):
 
 
 def test_enrichment_inline_and_materialization_noop(spark, lake):
-    """EP3: with the default enrich_inline, every fact row whose
+    """EP3: with inline enrichment, every fact row whose
     metadata arrived in the batch lands ALREADY enriched; rows without
     metadata stay NULL; materialize_enrichment then has nothing to do
     (sim 5's facts stay NULL — its metadata never arrives, so its day
@@ -130,7 +135,7 @@ def test_enrichment_inline_and_materialization_noop(spark, lake):
 
 def test_materialize_enrichment_fills_late_metadata(spark, incoming, tmp_path_factory):
     """W6 staged-rewrite path on its production scenario: facts arrive
-    BEFORE their metadata (enrich_inline finds no dim row), the next
+    BEFORE their metadata (inline enrichment finds no dim row), the next
     run loads the metadata, and materialize_enrichment back-fills the
     earlier facts via the atomic partition swap."""
     import shutil
@@ -156,21 +161,6 @@ def test_materialize_enrichment_fills_late_metadata(spark, incoming, tmp_path_fa
     assert lk.materialize_enrichment(spark) == 0  # idempotent
 
 
-def test_enrich_inline_false_defers_to_materialization(
-    spark, incoming, tmp_path_factory
-):
-    """The strict load-then-rewrite sequence is still available
-    (enrich_inline=False) and converges to the same state."""
-    root, _ = incoming
-    lk = ReactionLake(str(tmp_path_factory.mktemp("strict_lake")))
-    lk.run_once(spark, str(root), now=T0, enrich_inline=False)
-    fact = lk.fact(spark)
-    assert fact.filter(F.col("simulation_num").isNotNull()).count() == 0
-    assert lk.materialize_enrichment(spark) == 3 * N_ROWS
-    matched = lk.fact(spark).filter(F.col("simulation_num").isNotNull())
-    assert matched.count() == 3 * N_ROWS
-
-
 def test_quarantine_contents(spark, lake):
     q = lake.quarantine(spark)
     reasons = [r["reason"] for r in q.collect()]
@@ -185,22 +175,49 @@ def test_quarantine_contents(spark, lake):
 def test_audit_running_success_pairs(spark, lake):
     """One running→terminal event pair per processed file (W4/W5)."""
     audit = lake.audit(spark)
-    # 5 csvs + 5 jsons, 2 events each
-    assert audit.count() == 20
+    # 6 csvs + 6 jsons, 2 events each
+    assert audit.count() == 24
     per_id = audit.groupBy("etl_id").agg(
         F.count("*").alias("n"), F.min("status").alias("s1"), F.max("status").alias("s2")
     )
     assert per_id.filter(F.col("n") != 2).count() == 0
     latest = latest_status(audit)
-    assert latest.count() == 10
+    assert latest.count() == 12
     by_status = {
         r["status"]: r["n"]
         for r in latest.groupBy("status").agg(F.count("*").alias("n")).collect()
     }
-    # csvs: ok1 ok2 ok3 malformed(partial success) = 4 success, missing_col quarantined
-    # jsons: meta1-3 success, meta_bad + meta_missing quarantined
-    assert by_status == {"success": 7, "quarantined": 3}
+    # csvs: ok1 ok2 ok3 malformed(partial success) = 4 success,
+    #       missing_col + all_malformed quarantined
+    # jsons: meta1-3 + meta_dup (skipped) success, meta_bad + meta_missing quarantined
+    assert by_status == {"success": 8, "quarantined": 4}
     assert latest.filter(F.col("status") == "running").count() == 0
+
+
+def test_run_result_matches_audit(spark, lake):
+    """RunResult's tallies agree with the audit table's terminal events
+    and the quarantine table holds exactly the planted rejects."""
+    days = ["2026-01-05", "2026-01-06"]  # the fixture's drop, not later tests'
+    latest = latest_status(lake.audit(spark)).filter(F.col("day").isin(days))
+
+    def inserted(etl_type: str) -> int:
+        return latest.filter(F.col("etl_type") == etl_type).agg(F.sum("records_inserted")).first()[0]
+
+    res = lake.result
+    assert res.fact_rows_loaded == inserted("reaction") == 4 * N_ROWS - 1
+    assert res.dim_rows_loaded == inserted("metadata") == 3
+    assert res.files_quarantined == latest.filter(F.col("status") == "quarantined").count() == 4
+    assert res.files_processed == latest.count() == 12
+
+    q = lake.quarantine(spark).filter(F.col("day").isin(days))
+    per_file = Counter(r["source_file"].rsplit("/", 1)[-1] for r in q.collect())
+    assert per_file == {
+        f"reaction{sim_uuid(4)}.csv": 1,  # bad header: one file-level row
+        f"reaction{sim_uuid(5)}.csv": 1,
+        f"reaction{sim_uuid(9)}.csv": N_ROWS,
+        f"metadata_{sim_uuid(6)}.json": 1,
+        f"metadata_{sim_uuid(7)}.json": 1,
+    }
 
 
 def test_incremental_rerun_is_noop(spark, lake, incoming):
